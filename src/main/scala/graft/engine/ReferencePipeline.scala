@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *   hierarchy_edges JSONL hierarchy → PARENT_OF edges, dupes kept (R4)
   *   sheet_nodes/
   *   sheet_edges     workbook sheets × SheetMapping → (label,id)-keyed
-  *                   nodes + deduped edges (R5)
+  *                   nodes + deduped edges (R5), per sheet; both stages
+  *                   share one workbook parse and one sheet plan
   *   graph_nodes     MERGE-upsert of all node sources (existing-wins)
   *   graph_edges     hierarchy (CREATE) + sheet (MERGE) edges
   *   entity_ids      id-mapping join → entity_id property set (R7);
@@ -28,6 +29,13 @@ import org.apache.spark.sql.functions._
   * hierarchy endpoints by ID (main.py:62 vs main.py:91) — that asymmetry is
   * preserved: hierarchy edges are id-keyed, so integrity checks against
   * Concept nodes go through the node's `id` property, not its key.
+  *
+  * Known divergence (kept on purpose): the R5 MERGE dedup runs per sheet,
+  * so `sheet_nodes` — and so `graph_nodes` — keeps one row per sheet when a
+  * (label, id) appears on several sheets. The reference's MERGE across its
+  * sheet scripts keeps one node. Those rows also break
+  * [[GraphTable.upsertNodes]]'s "incoming unique per (label, key)"
+  * precondition.
   */
 object ReferencePipeline {
 
@@ -43,6 +51,10 @@ object ReferencePipeline {
     val maxCols = in.sheets.values
       .flatMap(m => Seq(m.node1.valueCol, m.node1.idCol, m.node2.valueCol, m.node2.idCol))
       .max + 1
+    // one workbook parse and one plan per stage for all sheets; lazy, so a
+    // resumed run past both sheet stages never opens the workbook
+    lazy val sheetGraph = CypherCompiler.sheetGraph(
+      XlsxSource.readSheets(spark, in.workbookPath, in.sheets.keys.toSeq.sorted, maxCols), in.sheets)
 
     new Pipeline(spark, checkpointDir)
       .addStage("concept_nodes") { _ =>
@@ -57,16 +69,8 @@ object ReferencePipeline {
           col("child_id").cast("string").as("dst"),
           lit("PARENT_OF").as("rel"))
       }
-      .addStage("sheet_nodes") { _ =>
-        in.sheets.map { case (idx, m) =>
-          CypherCompiler.sheetGraph(XlsxSource.readSheet(spark, in.workbookPath, idx, maxCols), m)._1
-        }.reduce(_ unionByName _)
-      }
-      .addStage("sheet_edges") { _ =>
-        in.sheets.map { case (idx, m) =>
-          CypherCompiler.sheetGraph(XlsxSource.readSheet(spark, in.workbookPath, idx, maxCols), m)._2
-        }.reduce(_ unionByName _)
-      }
+      .addStage("sheet_nodes")(_ => sheetGraph._1)
+      .addStage("sheet_edges")(_ => sheetGraph._2)
       .addStage("graph_nodes") { outs =>
         GraphTable.empty(spark)
           .upsertNodes(outs("concept_nodes"))

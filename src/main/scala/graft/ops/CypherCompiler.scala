@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Sanitize.sanitize
 
@@ -70,8 +71,11 @@ object CypherCompiler {
         lit("}) CREATE (m"), p, lit(")-[:PARENT_OF]->(m"), c, lit(")")).as("value"))
   }
 
-  /** R5 row pipeline (main.py:278-301) applied to a generic sheet DataFrame
-    * with positional columns `c0, c1, …` plus a `row_idx` order column:
+  /** R5 row pipeline (main.py:278-301) over a whole workbook at once: the
+    * sheets DataFrame carries a `sheet` index, positional string columns
+    * `c0, c1, …` and the per-sheet `row_idx` order column
+    * ([[graft.sources.XlsxSource.readSheets]]); `mappings` is keyed by that
+    * index and sheets without a mapping are ignored. Per sheet:
     *  1. terminate at the first row whose first cell is null (scan-stop
     *     semantic, main.py:285-286 — implemented as a computed cutoff, the
     *     parallel-safe equivalent);
@@ -79,53 +83,72 @@ object CypherCompiler {
     *  3. drop rows with a null node2 id (main.py:294-295);
     *  4. node1 null id becomes the literal 'None' (faithful to main.py:294's
     *     one-sided guard; see relationships_sheet4.cypher:1432).
+    * Each sheet's columns, labels and relation are picked in one projection
+    * by map-literal lookups on `sheet`, so the plan has the same shape for
+    * one sheet or sixteen. Output: (sheet, row_idx, label1, id1, value1,
+    * label2, id2, value2, rel).
     */
-  def sheetRows(sheet: DataFrame, m: SheetMapping): DataFrame = {
-    val cut = sheet.filter(col("c0").isNull).agg(min(col("row_idx")).as("cut"))
-    sheet
-      .join(broadcast(cut))
-      .filter(col("cut").isNull || col("row_idx") < col("cut"))
-      .filter(col("row_idx") > 0)
-      .filter(col(s"c${m.node2.idCol}").isNotNull)
+  def sheetRows(sheets: DataFrame, mappings: Map[Int, SheetMapping]): DataFrame = {
+    val nCols = sheets.columns.count(_.matches("c\\d+"))
+    for ((i, m) <- mappings; c <- Seq(m.node1.valueCol, m.node1.idCol, m.node2.valueCol, m.node2.idCol))
+      require(c < nCols, s"sheet $i maps column $c, but the sheets have $nCols columns")
+    val sheet = col("sheet")
+    val cells = array((0 until nCols).map(i => col(s"c$i").cast("string")): _*)
+    def cell(f: SheetMapping => Int): Column =
+      element_at(cells, element_at(typedLit(mappings.map { case (i, m) => i -> (f(m) + 1) }), sheet))
+    def conf(f: SheetMapping => String): Column =
+      element_at(typedLit(mappings.map { case (i, m) => i -> f(m) }), sheet)
+    val cut = min(when(col("c0").isNull, col("row_idx"))).over(Window.partitionBy(sheet))
+    sheets
+      .filter(sheet.isin(mappings.keys.toSeq: _*))
+      .withColumn("cut", cut)
+      .filter((col("cut").isNull || col("row_idx") < col("cut")) && col("row_idx") > 0)
       .select(
-        coalesce(col(s"c${m.node1.idCol}").cast("string"), lit("None")).as("id1"),
-        col(s"c${m.node1.valueCol}").cast("string").as("value1"),
-        col(s"c${m.node2.idCol}").cast("string").as("id2"),
-        col(s"c${m.node2.valueCol}").cast("string").as("value2"),
-        col("row_idx"))
+        sheet,
+        col("row_idx"),
+        conf(_.node1.label).as("label1"),
+        coalesce(cell(_.node1.idCol), lit("None")).as("id1"),
+        cell(_.node1.valueCol).as("value1"),
+        conf(_.node2.label).as("label2"),
+        cell(_.node2.idCol).as("id2"),
+        cell(_.node2.valueCol).as("value2"),
+        conf(_.relType).as("rel"))
+      .filter(col("id2").isNotNull)
   }
 
-  /** R5 statement emission: triple-MERGE with canonical variable names. */
-  def sheetStatements(sheet: DataFrame, m: SheetMapping): DataFrame =
-    sheetRows(sheet, m).select(
+  /** R5 statement emission: triple-MERGE with canonical variable names, in
+    * (sheet, row) order — the order the reference's scripts run in, which
+    * decides which `ON CREATE SET` wins. */
+  def sheetStatements(sheets: DataFrame, mappings: Map[Int, SheetMapping]): DataFrame =
+    sheetRows(sheets, mappings).orderBy("sheet", "row_idx").select(
       concat(
-        lit(s"MERGE (a:${m.node1.label} {id: "), q(col("id1")),
-        lit(s"}) ON CREATE SET a.name = "), q(col("value1")),
-        lit(s", a.type = '${m.node1.label}'  MERGE (b:${m.node2.label} {id: "), q(col("id2")),
-        lit(s"}) ON CREATE SET b.name = "), q(col("value2")),
-        lit(s", b.type = '${m.node2.label}' MERGE (a)-[:${m.relType}]->(b)")).as("value"))
+        lit("MERGE (a:"), col("label1"), lit(" {id: "), q(col("id1")),
+        lit("}) ON CREATE SET a.name = "), q(col("value1")),
+        lit(", a.type = '"), col("label1"), lit("'  MERGE (b:"), col("label2"), lit(" {id: "), q(col("id2")),
+        lit("}) ON CREATE SET b.name = "), q(col("value2")),
+        lit(", b.type = '"), col("label2"), lit("' MERGE (a)-[:"), col("rel"), lit("]->(b)")).as("value"))
 
   /** R5 structured form: (nodes, edges) with MERGE dedup keys — nodes by
-    * (label, id), edges by (src, dst, rel) (SURVEY.md §2.1 R5). */
-  def sheetGraph(sheet: DataFrame, m: SheetMapping): (DataFrame, DataFrame) = {
-    val rows = sheetRows(sheet, m)
-    val n1 = rows.select(
-      lit(m.node1.label).as("label"), col("id1").as("key"),
-      map(lit("name"), col("value1"), lit("type"), lit(m.node1.label)).as("props"),
-      col("row_idx"))
-    val n2 = rows.select(
-      lit(m.node2.label).as("label"), col("id2").as("key"),
-      map(lit("name"), col("value2"), lit("type"), lit(m.node2.label)).as("props"),
-      col("row_idx"))
-    val nodes = GraphTable
-      .firstWriterWins(n1.unionByName(n2), Seq("label", "key"), "row_idx")
-      .drop("row_idx")
+    * (label, id), edges by (src, dst, rel) (SURVEY.md §2.1 R5) — applied per
+    * sheet, as the reference runs one script per sheet. Within a row node1
+    * is merged before node2, so it wins a (label, id) tie. */
+  def sheetGraph(sheets: DataFrame, mappings: Map[Int, SheetMapping]): (DataFrame, DataFrame) = {
+    val rows = sheetRows(sheets, mappings)
+    def node(label: String, id: String, value: String): Column =
+      struct(col(label).as("label"), col(id).as("key"),
+        map(lit("name"), col(value), lit("type"), col(label)).as("props"))
+    val nodes = rows
+      .select(col("sheet"), col("row_idx"),
+        posexplode(array(node("label1", "id1", "value1"), node("label2", "id2", "value2"))))
+      .select(col("sheet"), (col("row_idx") * 2 + col("pos")).as("ord"), col("col.*"))
     val edges = rows
       .select(
-        lit(m.node1.label).as("src_label"), col("id1").as("src"),
-        lit(m.node2.label).as("dst_label"), col("id2").as("dst"),
-        lit(m.relType).as("rel"))
-      .dropDuplicates("src_label", "src", "dst_label", "dst", "rel")
-    (nodes, edges)
+        col("sheet"),
+        col("label1").as("src_label"), col("id1").as("src"),
+        col("label2").as("dst_label"), col("id2").as("dst"),
+        col("rel"))
+      .dropDuplicates("sheet", "src_label", "src", "dst_label", "dst", "rel")
+      .drop("sheet")
+    (GraphTable.firstWriterWins(nodes, Seq("sheet", "label", "key"), "ord").drop("sheet", "ord"), edges)
   }
 }

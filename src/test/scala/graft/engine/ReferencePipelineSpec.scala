@@ -1,9 +1,13 @@
 package graft.engine
 
-import graft.SparkSpec
+import graft.{SparkSpec, XlsxFixture}
 import graft.ops.{Enrichment, SheetMapping}
 import org.apache.spark.sql.functions._
 import java.io.{File, FileOutputStream}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import scala.jdk.CollectionConverters._
@@ -85,5 +89,62 @@ class ReferencePipelineSpec extends SparkSpec {
     val (nb2, eb2) = ReferencePipeline.load(g, batchSize = 2,
       (id, batch) => ReferencePipelineSpec.sent.add(id.toString -> batch.size), s"$dir/ledger")
     assert(nb2 == 0 && eb2 == 0 && ReferencePipelineSpec.sent.isEmpty)
+  }
+
+  test("sheet stages keep per-sheet MERGE semantics across a multi-sheet workbook") {
+    val dir = Files.createTempDirectory("graft-refpipe-sheets").toString
+    val in = writeFixtures(dir).copy(
+      workbookPath = XlsxFixture.write(XlsxFixture.multiSheet),
+      sheets = XlsxFixture.multiSheetMappings)
+    val outs = ReferencePipeline.build(spark, in, s"$dir/ckpt").run()
+    // 4 + 3 + 3 per-sheet nodes: 'API1' and 'NT1' stay once per sheet
+    assert(outs("sheet_nodes").count() == 10)
+    assert(outs("sheet_edges").count() == 6)
+    // 2 concepts + 10 sheet nodes (the cross-sheet duplicates are kept)
+    assert(outs("graph_nodes").count() == 12)
+    // 2 PARENT_OF (CREATE) + 5 distinct sheet edges (MERGE across sheets)
+    assert(outs("graph_edges").count() == 7)
+  }
+
+  /** Jobs started on this thread while `body` runs. A marker job submitted
+    * afterwards flushes the listener bus, which delivers events in order. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          if (g == s"$group-end") flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the 16 reference sheets compile in a bounded number of jobs, not one plan per sheet") {
+    val dir = Files.createTempDirectory("graft-refpipe-jobs").toString
+    val in = writeFixtures(dir).copy(
+      workbookPath = XlsxFixture.write(XlsxFixture.referenceSheets),
+      sheets = SheetMapping.referenceConfig)
+    val ckpt = s"$dir/ckpt"
+    val outs = ReferencePipeline.build(spark, in, ckpt).run()
+    assert(outs("sheet_edges").count() == 16 * 3)
+    // a resume that rebuilds only the two sheet stages, against one that
+    // rebuilds nothing: the difference is those stages' own jobs
+    val idle = jobsDuring(ReferencePipeline.build(spark, in, ckpt).run())
+    Seq("sheet_nodes", "sheet_edges").foreach(s => FileUtils.deleteDirectory(new File(s"$ckpt/$s")))
+    val sheetJobs = jobsDuring(ReferencePipeline.build(spark, in, ckpt).run()) - idle
+    info(s"sheet_nodes + sheet_edges: $sheetJobs jobs")
+    assert(sheetJobs > 0 && sheetJobs <= 6)
   }
 }

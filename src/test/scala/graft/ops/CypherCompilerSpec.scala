@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkSpec, XlsxFixture}
+import graft.sources.XlsxSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,15 +60,18 @@ class CypherCompilerSpec extends SparkSpec {
 
   private val treats = SheetMapping.referenceConfig(5) // MedicationAPI -TREATS-> NeoplasmType
 
-  /** Sheet fixture: header + rows, positional columns c0..c3 + row_idx. */
+  /** Sheet fixture: header + rows, positional columns c0..c3 + row_idx,
+    * as sheet 0 of a workbook. */
   private def sheet(rows: (String, String, String, String)*): DataFrame =
-    GraphTable.withRowIndex(rows.toDF("c0", "c1", "c2", "c3"))
+    GraphTable.withRowIndex(rows.toDF("c0", "c1", "c2", "c3")).withColumn("sheet", lit(0))
+
+  private def only(m: SheetMapping) = Map(0 -> m)
 
   test("sheet: header skipped, basic triple-MERGE emitted (main.py:287-300)") {
     val s = sheet(
       ("Medication: API", "id", "Neoplasm Type", "id"),
       ("Atezolizumab", "API4821", "Malignant Bladder Neoplasm", "NT54"))
-    val got = CypherCompiler.sheetStatements(s, treats).as[String].collect().toSeq
+    val got = CypherCompiler.sheetStatements(s, only(treats)).as[String].collect().toSeq
     assert(got == Seq(
       "MERGE (a:MedicationAPI {id: 'API4821'}) ON CREATE SET a.name = 'Atezolizumab', a.type = 'MedicationAPI'  " +
         "MERGE (b:NeoplasmType {id: 'NT54'}) ON CREATE SET b.name = 'Malignant Bladder Neoplasm', b.type = 'NeoplasmType' " +
@@ -80,7 +84,7 @@ class CypherCompilerSpec extends SparkSpec {
       ("A", "1", "X", "2"),
       (null, "9", "Y", "3"), // terminator
       ("B", "4", "Z", "5"))  // after terminator — must not appear
-    assert(CypherCompiler.sheetRows(s, treats).count() == 1)
+    assert(CypherCompiler.sheetRows(s, only(treats)).count() == 1)
   }
 
   test("sheet: null node2 id rows dropped; null node1 id becomes literal 'None' (main.py:294; sheet4:1432)") {
@@ -88,14 +92,14 @@ class CypherCompilerSpec extends SparkSpec {
       ("h", "h", "h", "h"),
       ("KeepNoneId", null, "X", "NT1"),
       ("Dropped", "API1", "Y", null))
-    val rows = CypherCompiler.sheetRows(s, treats).collect()
+    val rows = CypherCompiler.sheetRows(s, only(treats)).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("id1") == "None")
   }
 
   test("sheet: trailing-space label is preserved verbatim (main.py:243-263)") {
     val memberOf = SheetMapping.referenceConfig(18) // MedicationClass with trailing space
     val s = sheet(("h", "h", "h", "h"), ("Dornase alfa", "API2", "Expectorants", "TU3"))
-    val got = CypherCompiler.sheetStatements(s, memberOf).as[String].collect().head
+    val got = CypherCompiler.sheetStatements(s, only(memberOf)).as[String].collect().head
     assert(got.contains("MERGE (b:MedicationClass  {id: 'TU3'})") &&
       got.contains("b.type = 'MedicationClass '"))
   }
@@ -106,7 +110,7 @@ class CypherCompilerSpec extends SparkSpec {
       ("Atezolizumab", "API4821", "Bladder", "NT54"),
       ("Atezolizumab", "API4821", "Bladder", "NT54"), // exact dup statement (1,793 in sheet4)
       ("Atezolizumab", "API4821", "Prostate", "NT49"))
-    val (nodes, edges) = CypherCompiler.sheetGraph(s, treats)
+    val (nodes, edges) = CypherCompiler.sheetGraph(s, only(treats))
     assert(nodes.count() == 3) // API4821, NT54, NT49
     assert(edges.count() == 2)
   }
@@ -117,9 +121,59 @@ class CypherCompilerSpec extends SparkSpec {
       Seq(
         ("h", "h", "h", "h", "h", "h", "h", "h", "h"),
         ("Lobectomy", "SE1", "x", "x", "x", "x", "OT9", "x", "Survival"))
-        .toDF("c0", "c1", "c2", "c3", "c4", "c5", "c6", "c7", "c8"))
-    val r = CypherCompiler.sheetRows(wide, m).collect().head
+        .toDF("c0", "c1", "c2", "c3", "c4", "c5", "c6", "c7", "c8")).withColumn("sheet", lit(2))
+    val r = CypherCompiler.sheetRows(wide, Map(2 -> m)).collect().head
     assert(r.getAs[String]("id1") == "SE1" && r.getAs[String]("value1") == "Lobectomy")
     assert(r.getAs[String]("id2") == "OT9" && r.getAs[String]("value2") == "Survival")
+  }
+
+  // —— R5 across sheets: one plan, rules still per sheet ——
+
+  private def nodeRows(df: DataFrame) =
+    df.as[(String, String, Map[String, String])].collect().toSeq.sortBy(_.toString)
+  private def edgeRows(df: DataFrame) =
+    df.as[(String, String, String, String, String)].collect().toSeq.sortBy(_.toString)
+
+  test("multi-sheet sheetGraph equals the union of one-sheet calls") {
+    val path = XlsxFixture.write(XlsxFixture.multiSheet)
+    val mappings = XlsxFixture.multiSheetMappings
+    val (nodes, edges) = CypherCompiler.sheetGraph(
+      XlsxSource.readSheets(spark, path, Seq(0, 1, 2), 9), mappings)
+    val single = mappings.toSeq.map { case (i, m) =>
+      CypherCompiler.sheetGraph(XlsxSource.readSheets(spark, path, Seq(i), 9), Map(i -> m))
+    }
+    assert(nodeRows(nodes) == nodeRows(single.map(_._1).reduce(_ unionByName _)))
+    assert(edgeRows(edges) == edgeRows(single.map(_._2).reduce(_ unionByName _)))
+
+    // and those per-sheet semantics, spelled out
+    val n = nodeRows(nodes)
+    assert(n.size == 10)
+    assert(n.count(r => r._1 == "MedicationAPI" && r._2 == "API1") == 2) // one per sheet
+    assert(n.contains(("SurgicalExtent ", "SE1", Map("name" -> "Lobectomy", "type" -> "SurgicalExtent "))))
+    assert(n.contains(("OutcomeType", "OT1", Map("name" -> "Survival", "type" -> "OutcomeType"))))
+    assert(n.contains(("SurgicalExtent ", "None", Map("name" -> "Wedge", "type" -> "SurgicalExtent "))))
+    assert(n.contains(("MedicationAPI", "None", Map("name" -> "Nivolumab", "type" -> "MedicationAPI"))))
+    assert(!n.exists(r => Set("API2", "API9", "NT9", "API3", "NT3")(r._2))) // null node2 id, cutoff, after cutoff
+    val e = edgeRows(edges)
+    assert(e.size == 6 && e.distinct.size == 5)
+    assert(e.count(_ == (("MedicationAPI", "API1", "NeoplasmType", "NT1", "TREATS"))) == 2)
+    assert(e.contains(("SurgicalExtent ", "SE1", "OutcomeType", "OT1", "ASSOCIATED_WITH")))
+  }
+
+  test("multi-sheet statements come out in (sheet, row) order") {
+    val path = XlsxFixture.write(XlsxFixture.multiSheet)
+    val got = CypherCompiler
+      .sheetStatements(XlsxSource.readSheets(spark, path, Seq(0, 1, 2), 9),
+        XlsxFixture.multiSheetMappings)
+      .as[String].collect().toSeq
+    val ids = got.map(_.split("\\{id: '")(1).takeWhile(_ != '\''))
+    assert(ids == Seq("SE1", "SE1", "None", "API1", "API1", "API1", "None"))
+    assert(got.head.startsWith("MERGE (a:SurgicalExtent  {id: 'SE1'})") &&
+      got.head.endsWith("b.type = 'OutcomeType' MERGE (a)-[:ASSOCIATED_WITH]->(b)"))
+  }
+
+  test("sheetRows rejects a mapping that reads past the sheet's columns") {
+    intercept[IllegalArgumentException](
+      CypherCompiler.sheetRows(sheet(("h", "h", "h", "h")), only(SheetMapping.referenceConfig(2))))
   }
 }

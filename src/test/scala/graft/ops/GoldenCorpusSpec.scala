@@ -52,7 +52,8 @@ class GoldenCorpusSpec extends SparkSpec {
       val rows = ("h", "h", "h", "h") +: parsed.map(p =>
         (p.group("n1"), p.group("id1"), p.group("n2"), p.group("id2")))
       val sheet = GraphTable.withRowIndex(rows.toDF("c0", "c1", "c2", "c3"))
-      val ours = CypherCompiler.sheetStatements(sheet, m)
+        .withColumn("sheet", org.apache.spark.sql.functions.lit(0))
+      val ours = CypherCompiler.sheetStatements(sheet, Map(0 -> m))
         .as[String].collect().toSeq
       val golden = parsed.map(canonicalize)
       assert(ours.size == golden.size, s"${f.getName}: ${ours.size} vs ${golden.size}")

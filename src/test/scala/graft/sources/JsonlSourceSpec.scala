@@ -34,4 +34,29 @@ class JsonlSourceSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(out == Seq((181724L, 900002L), (191083L, 900001L)))
   }
+
+  private def pairs(p: String) =
+    JsonlSource.idMapping(spark, p).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  test("idMapping: a pretty-printed multi-line object and numbers or strings as values") {
+    val p = tmp(
+      """{
+        |  "191083": 900001,
+        |  "181724": "900002"
+        |}
+        |""".stripMargin)
+    assert(pairs(p) == Seq((181724L, 900002L), (191083L, 900001L)))
+  }
+
+  test("idMapping: an empty object gives no rows") {
+    assert(pairs(tmp("{}")).isEmpty)
+  }
+
+  test("idMapping: a 25,000-entry mapping is read without one field per entry") {
+    val p = tmp((1 to 25000).map(i => s""""$i": ${1000000 + i}""").mkString("{", ", ", "}"))
+    val df = JsonlSource.idMapping(spark, p)
+    assert(df.queryExecution.analyzed.collectLeaves().map(_.output.size).max == 1)
+    val agg = df.agg(org.apache.spark.sql.functions.count("*"), org.apache.spark.sql.functions.sum("entity_id")).head()
+    assert(agg.getLong(0) == 25000L && agg.getLong(1) == (1 to 25000).map(1000000L + _).sum)
+  }
 }

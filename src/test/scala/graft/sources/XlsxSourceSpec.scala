@@ -73,6 +73,30 @@ class XlsxSourceSpec extends SparkSpec {
     assert(rows(2).getString(0) == "3")
   }
 
+  // —— readSheets: one parse, one local relation, rows tagged by sheet ——
+
+  private def twoSheets() = graft.XlsxFixture.write(Map(
+    0 -> Seq(Seq("a0", "x"), Seq(null, null), Seq("a2", null)), // row 2 absent from the XML
+    3 -> Seq(Seq("b0", "y"), Seq("b1", "z"), Seq(null, null), Seq(null, null), Seq("b4", "w"))))
+
+  test("readSheets: rows tagged with their sheet, row_idx restarts per sheet, gaps kept per sheet") {
+    val df = XlsxSource.readSheets(spark, twoSheets(), Seq(3, 0), 2)
+    assert(df.columns.toSeq == Seq("sheet", "c0", "c1", "row_idx"))
+    val rows = df.collect().map(r => (r.getInt(0), r.getLong(3), Option(r.getString(1)))).toSeq.sortBy(r => (r._1, r._2))
+    assert(rows == Seq(
+      (0, 0L, Some("a0")), (0, 1L, None), (0, 2L, Some("a2")),
+      (3, 0L, Some("b0")), (3, 1L, Some("b1")), (3, 2L, None), (3, 3L, None), (3, 4L, Some("b4"))))
+  }
+
+  test("readSheets: a missing sheet index throws") {
+    intercept[IllegalArgumentException](XlsxSource.readSheets(spark, twoSheets(), Seq(0, 1), 2))
+  }
+
+  test("readSheets: the plan's leaf is a LocalRelation") {
+    val leaves = XlsxSource.readSheets(spark, twoSheets(), Seq(0, 3), 2).queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+  }
+
   test("column reference decoding") {
     assert(XlsxSource.colIndex("A1") == 0)
     assert(XlsxSource.colIndex("Z9") == 25)
